@@ -115,18 +115,25 @@ object Bench {
     * is omitted entirely (not `{}`) so a parser can never read it as
     * "zero queries ran"; per-query data lives in the full line and in
     * bench_history.jsonl, keyed by the shared `value_end` stamp.
+    * `queries`, when given, is the full line's `"queries":{…},` member:
+    * both lines come from this one builder.
     */
   def compactLine(total: Double, nOk: Int, nFail: Int, sfDir: String,
       sweepNote: String, escalated: Boolean, loadStart: Double,
       loadEnd: Double, loadWaited: Int, contended: Boolean, anchor: String,
-      idleRetries: Int, gatePayer: String): String =
-    s"""{"metric":"total_ok","value":$total,"unit":"sec","n_ok":$nOk,""" +
-      s""""n_fail":$nFail,"sf":"$sfDir","sweep":"$sweepNote",""" +
-      s""""escalated":$escalated,"action":"$Action","load_start":$loadStart,""" +
+      idleRetries: Int, gatePayer: String, queries: String = ""): String =
+    s"""{"metric":"total_ok","value":$total,"unit":"sec",$queries""" +
+      s""""n_ok":$nOk,"n_fail":$nFail,"sf":"${jsonEsc(sfDir)}",""" +
+      s""""sweep":"${jsonEsc(sweepNote)}","escalated":$escalated,""" +
+      s""""action":"$Action","load_start":$loadStart,""" +
       s""""load_end":$loadEnd,"load_waited_s":$loadWaited,""" +
-      s""""contended":$contended,"anchor":"$anchor",""" +
-      s""""idle_retries":$idleRetries,"gate_payer":"$gatePayer",""" +
-      s""""value_end":$total}"""
+      s""""contended":$contended,"anchor":"${jsonEsc(anchor)}",""" +
+      s""""idle_retries":$idleRetries,""" +
+      s""""gate_payer":"${jsonEsc(gatePayer)}","value_end":$total}"""
+
+  /** `s` escaped for a JSON string body: quotes and backslashes. */
+  def jsonEsc(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
 
   /** The newest BENCH_r*.json strictly older than the in-flight round, so a
     * re-run inside a round that already wrote its own BENCH file never
@@ -467,7 +474,7 @@ object Bench {
         f"$name=${t / sessionMedian(name)}%.2fx"
     }.mkString(",")
     val qs = shipped.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) f"$v%.3f" else "null")
+      "\"" + jsonEsc(k) + "\":" + (if (ok) f"$v%.3f" else "null")
     }.mkString("{", ",", "}")
     val okTimes = shipped.collect { case (_, v, true) => v }
     val total = okTimes.sum
@@ -504,15 +511,16 @@ object Bench {
     val anchorRatio = ratioOf(shipped)
     val contended = anchorRatio.exists(_ > 1.05)
     val anchor = anchorRatio.map(r => f"$r%.3f").getOrElse("none")
-    val line = s"""{"metric":"total_ok","value":$total,"unit":"sec","queries":$qs,"n_ok":${okTimes.size},"n_fail":$nFail,"sf":"$sfDir","sweep":"$sweepNote","escalated":$escalated,"action":"$Action","load_start":$loadStart,"load_end":$loadEnd,"load_waited_s":$loadWaited,"contended":$contended,"anchor":"$anchor","idle_retries":$idleRetries,"gate_payer":"$gatePayer","value_end":$total}"""
+    def headline(queries: String) = compactLine(total, okTimes.size, nFail,
+      sfDir, sweepNote, escalated, loadStart, loadEnd, loadWaited,
+      contended, anchor, idleRetries, gatePayer, queries)
+    val line = headline(s""""queries":$qs,""")
     println(line)
     // compact headline-only final line — survives the driver's ~2 KB
     // stdout-tail capture, which the full line above has overflowed since
     // round 2 (see compactLine scaladoc). Printed AFTER the full line so
     // it is the last JSON in any tail window.
-    println(compactLine(total, okTimes.size, nFail, sfDir, sweepNote,
-      escalated, loadStart, loadEnd, loadWaited, contended, anchor,
-      idleRetries, gatePayer))
+    println(headline(""))
     // full-suite runs feed the next run's arbitration via the (complete,
     // untruncated) local history; partial SPARK_GRAFT_ONLY runs do not.
     // Only the FULL line is appended — a history row without a queries

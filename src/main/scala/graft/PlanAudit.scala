@@ -753,13 +753,12 @@ object PlanAudit {
     // an interval join (the stitches join q-row aggregates on the
     // synthetic instance id, hash/broadcast). r20: FOUR one-sided
     // frames, count+sum each — the two-sided frames of the r18/r19
-    // form are exact decimal differences of the one-sided ones, so the
-    // upper mention bound pins that the two extra frames stay gone
-    // (formatted explain names each node at most twice: tree + detail)
+    // form are exact decimal differences of the one-sided ones. The
+    // exact mention count pins four frames, no more and no fewer
+    // (formatted explain names each node twice: tree + detail)
     audit("j7i_overlap_len (four prefix frames, no interval join)", Seq(
       "four one-sided RangeAggPrefix frames planned (not six)" ->
-        (p => { val n = "RangeAggPrefix".r.findAllIn(p).size
-          n >= 4 && n <= 8 }),
+        (p => "RangeAggPrefix".r.findAllIn(p).size == 8),
       "range exchanges feed the stitches" ->
         (_.contains("rangepartitioning")),
       "instance ids content-derived (window, no checkpoint scan)" ->
@@ -844,8 +843,7 @@ object PlanAudit {
     // interval join. r20: four one-sided frames (see j7i_overlap_len)
     audit("j7i_keyed_len (four keyed prefix frames)", Seq(
       "four one-sided RangeAggPrefix frames planned (not six)" ->
-        (p => { val n = "RangeAggPrefix".r.findAllIn(p).size
-          n >= 4 && n <= 8 }),
+        (p => "RangeAggPrefix".r.findAllIn(p).size == 8),
       "equi key leads the range sorts" -> (_.contains("_graft_k0")),
       "instance ids content-derived (window, no checkpoint scan)" ->
         (p => p.contains("row_number") && !p.contains("Scan ExistingRDD")),

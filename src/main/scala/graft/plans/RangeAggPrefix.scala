@@ -1,15 +1,13 @@
 package graft.plans
 
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, UnaryNode, Union}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, UnknownPartitioning}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
+import SortedStream._
 
 /** Join-free per-interval range aggregation as a first-class plan
   * (r17: the j7b ×100 finding — VERDICT r16 Next #1).
@@ -36,17 +34,10 @@ import scala.collection.mutable.ArrayBuffer
   *             Project(hi-probe)  Filter(nonempty band, intervals)
   *             Project(point)     Filter(pt not null, points)
   *
-  * The custom exec declares `OrderedDistribution(v, tag)`, so
-  * EnsureRequirements inserts the stock RANGE ShuffleExchange + SortExec
-  * (sampled range partitioner, UnsafeRow shuffle, codegen sort — the
-  * same machinery a global ORDER BY uses). The exec itself then runs
-  * two passes over the sorted child: job 1 collects one tiny
-  * per-partition totals row (the only driver sync — the same bounded
-  * state a RangePartitioner's sample job carries), job 2 re-reads the
-  * SAME shuffle output (exchange reuse; only the cheap per-partition
-  * sort re-runs) seeded with exclusive per-partition offsets and emits
-  * one row per PROBE: the interval's carried key columns plus its
-  * SIGNED global running totals (lo-probe −P, hi-probe +P).
+  * The scan ([[SortedStream]]) emits one row per PROBE: the interval's
+  * carried key columns plus its SIGNED global running totals (lo-probe
+  * −P, hi-probe +P). Its summary is one totals row per partition, and
+  * the driver folds them into exclusive per-partition offsets.
   *
   * Signed probes make the final Aggregate duplicate-safe BY
   * CONSTRUCTION: a group's value is Σ over its probe rows of ±P, which
@@ -66,74 +57,20 @@ import scala.collection.mutable.ArrayBuffer
   * as LONGS (unscaled cents for `sum(cast(x as decimal(p ≤ 18, s)))`),
   * so every prefix is order- and partitioning-independent and the
   * answer is bit-identical to the join form. Plain DOUBLE sums are
-  * declined (re-association drifts). 64-bit accumulator overflow raises
-  * a named error rather than wrapping — note the bound is the
-  * CORPUS-WIDE running prefix (every point's contribution across the
-  * whole stream passes through one running total), not the per-group
-  * sum: a query whose per-group answers are tiny still fails loudly
-  * once the corpus total of a sum column passes ~9.2e18 unscaled
-  * units, where the pair-join plan would have succeeded — the error
-  * names spark.graft.rangeJoin.aggPrefix=false as the escape hatch.
-  * (A wrapped-mod-2^64 prefix would be bit-identical to the join form
-  * for INTEGRAL sums in non-ANSI mode, but silently wrong for decimal
-  * sums whose per-group totals exceed a long — loud is the only
-  * answer that is never silently wrong for every supported shape.)
-  * Values are ordered by their DOUBLE image, so the rewrite only fires
-  * for types whose double cast is order- and equality-exact
-  * (double/float/int and narrower); −0.0 is normalized to +0.0 (SQL
-  * comparison says they're equal, IEEE sort says they're not); NaN
-  * needs no normalization — Spark's nan-safe sort (NaN greatest,
-  * NaN = NaN) makes probe tag order reproduce SQL's NaN comparison
-  * semantics exactly, so NaN points and NaN bounds both take the
-  * prefix path.
+  * declined (re-association drifts). 64-bit accumulator overflow of the
+  * CORPUS-WIDE running prefix raises a named error rather than wrapping
+  * ([[SortedStream.addX]]). NaN points and NaN bounds both take the
+  * prefix path (see [[SortedStream]]'s key contract).
   *
   * 100 TB story: one range exchange of n+2q skinny rows, two linear
-  * passes, driver state = numPartitions × nAcc longs. No pair is ever
-  * materialized, so cost is independent of band density — the measured
-  * ×100 gap vs the pair join is 26 s vs 910–1502 s.
+  * passes, driver state = numPartitions × nAcc longs; the measured ×100
+  * gap vs the pair join is 26 s vs 910–1502 s.
   */
 object RangeAggPrefix {
 
   /** One accumulator: a per-point contribution expression (LongType)
     * and the exec-output attribute carrying its signed prefix. */
   private case class Acc(contrib: Expression, out: AttributeReference)
-
-  /** Double image that normalizes −0.0 to +0.0 (NaN and everything
-    * else unchanged — IEEE: −0.0 + 0.0 = +0.0). */
-  private def dbl(e: Expression): Expression =
-    Add(Cast(e, DoubleType), Literal(0.0))
-
-  /** Types whose cast to double is order- AND equality-exact. */
-  private def orderExact(e: Expression): Boolean = e.dataType match {
-    case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
-
-  /** Types an equi-key column may have: the keyed prefix turns `=` into
-    * sort CONTIGUITY, so sort equality must coincide with SQL equality.
-    * That holds for every fixed-width atomic, binary-collated strings,
-    * and decimals; floats/doubles need −0.0 normalized (Double.compare
-    * distinguishes −0.0 < 0.0 where SQL says equal — NaN is fine: all
-    * NaNs compare equal in both orders, and Spark SQL's `=` says
-    * NaN = NaN too). Anything else (collated strings, arrays, structs,
-    * intervals) declines to the join path. */
-  private[plans] def sortKeyExact(e: Expression): Boolean = e.dataType match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | DateType | TimestampType |
-         TimestampNTZType | _: DecimalType => true
-    case s: StringType => s == StringType // UTF8_BINARY default only
-    case _ => false
-  }
-
-  /** Sort image of an equi key: float/double get the −0.0 → +0.0
-    * normalization (the [[dbl]] trick, in the key's own type so the
-    * value set is unchanged); every other allowed type already sorts
-    * exactly as SQL compares. */
-  private[plans] def normKey(e: Expression): Expression = e.dataType match {
-    case DoubleType => Add(e, Literal(0.0))
-    case FloatType => Add(e, Literal(0.0f))
-    case _ => e
-  }
 
   /** Build the join-free prefix plan for
     * `Aggregate(groupExprs, aggExprs)` over the band join
@@ -157,7 +94,7 @@ object RangeAggPrefix {
     * Returns None when any guard fails (caller falls back to the pair
     * join):
     *  - pt/lo/hi double-exact types; equi keys sort-exact types (see
-    *    [[sortKeyExact]]), both sides of a pair the same type;
+    *    [[SortedStream.sortKeyExact]]), both sides of a pair the same type;
     *  - every group key an interval-side Attribute;
     *  - every aggregate one of: count(non-null literal), count(pt-side
     *    expr), sum(cast(pt-side expr as decimal(p ≤ 18, s))), sum of an
@@ -171,12 +108,8 @@ object RangeAggPrefix {
                ptPlan: LogicalPlan, ivPlan: LogicalPlan,
                equiKeys: Seq[(Expression, Expression)] = Nil)
       : Option[LogicalPlan] = {
-    if (!Seq(pt, lo, hi).forall(orderExact)) return None
-    if (!Seq(pt, lo, hi).forall(_.deterministic)) return None
-    if (!equiKeys.forall { case (pk, ik) =>
-          pk.deterministic && ik.deterministic &&
-          sortKeyExact(pk) && sortKeyExact(ik) &&
-          pk.dataType == ik.dataType }) return None
+    if (!bandExact(pt, lo, hi) || !keysExact(equiKeys, ptPlan, ivPlan))
+      return None
     val ivOut = ivPlan.outputSet
     val ptOut = ptPlan.outputSet
     val keyAttrs: Seq[Attribute] = groupExprs.map {
@@ -281,45 +214,19 @@ object RangeAggPrefix {
     val legal = AttributeSet(carryKeys ++ accs.map(_.out))
     if (!mapped.forall(_.references.subsetOf(legal))) return None
 
-    // equi keys: each pair must reference its own side only (the caller
-    // decides orientation; this re-checks it)
-    if (!equiKeys.forall { case (pk, ik) =>
-          pk.references.nonEmpty && pk.references.subsetOf(ptOut) &&
-          ik.references.nonEmpty && ik.references.subsetOf(ivOut) })
-      return None
-
     // ---- merged event stream --------------------------------------
-    // layout (positional contract with the exec):
-    //   [0] v: double  [1] tag: int  [2] sign: int
-    //   [3 .. 3+e) equi-key sort columns (iv side on probes, pt side
-    //              on points — the columns `=` turns into contiguity)
-    //   [3+e .. 3+e+m) carried interval key columns
-    //   [3+e+m .. 3+e+m+k) per-point contribution columns (long)
-    val zero = Literal(0L)
+    // payload: per-point contribution columns (long), zero on probes
+    val ivKeys = equiKeys.map(_._2)
+    val ptKeys = equiKeys.map(_._1)
     // a strict-strict band with lo == hi matches nothing but would
     // telescope negative; every other empty/inverted/null band is
     // dropped by the same comparison going false-or-null
-    val keepProbe0 =
-      if (loStrict && hiStrict) LessThan(dbl(lo), dbl(hi))
-      else LessThanOrEqual(dbl(lo), dbl(hi))
-    // a null equi key never matches (SQL `=`): drop those rows up front
-    // on BOTH sides — a kept null-key row would sort into the
-    // nulls-first run and pair with other null-key rows
-    val keepProbe = equiKeys.map(_._2).map(IsNotNull)
-      .foldLeft[Expression](keepProbe0)(And(_, _))
-    val loTag = Literal(if (loStrict) 2 else 0)
-    val hiTag = Literal(if (hiStrict) 0 else 2)
-    val ivF = Filter(keepProbe, ivPlan)
-    def probeChild(bound: Expression, tag: Literal, sign: Int): Project =
-      Project(Seq(Alias(dbl(bound), "_graft_v")(),
-        Alias(tag, "_graft_tag")(),
-        Alias(Literal(sign), "_graft_sign")()) ++
-        equiKeys.zipWithIndex.map { case ((_, ik), i) =>
-          Alias(normKey(ik), s"_graft_k$i")() } ++
-        carryKeys ++
-        accs.indices.map(i => Alias(zero, s"_graft_c$i")()), ivF)
-    val probesLo = probeChild(lo, loTag, -1)
-    val probesHi = probeChild(hi, hiTag, 1)
+    val ivF = keep(nonEmptyBand(lo, hi, loStrict && hiStrict), ivKeys, ivPlan)
+    def probeChild(bound: Expression, tag: Int, sign: Int): Project =
+      branch(dbl(bound), tag, sign, ivKeys, carryKeys ++
+        accs.indices.map(i => Alias(Literal(0L), s"_graft_c$i")()), ivF)
+    val probesLo = probeChild(lo, if (loStrict) 2 else 0, -1)
+    val probesHi = probeChild(hi, if (hiStrict) 0 else 2, 1)
     // null point values never satisfy the band (SQL: NULL comparison is
     // NULL). NaN points STAY in the stream (r17 advice): under Spark's
     // TOTAL order NaN is greater than every value and equal to itself,
@@ -332,15 +239,9 @@ object RangeAggPrefix {
     // sorts before all NaN points. Dropping NaN points here would
     // silently undercount (NaN point, NaN hi) pairs vs the join form
     // (RangeAggSpec pins the parity with a nan-safe brute force).
-    val ptF = Filter(equiKeys.map(_._1).map(IsNotNull)
-      .foldLeft[Expression](IsNotNull(pt))(And(_, _)), ptPlan)
-    val ptsChild = Project(Seq(Alias(dbl(pt), "_graft_v")(),
-      Alias(Literal(1), "_graft_tag")(),
-      Alias(Literal(0), "_graft_sign")()) ++
-      equiKeys.zipWithIndex.map { case ((pk, _), i) =>
-        Alias(normKey(pk), s"_graft_k$i")() } ++
-      carryKeys.map(ka => Alias(Literal(null, ka.dataType), ka.name)()) ++
-      accs.map(a => Alias(a.contrib, a.out.name)()), ptF)
+    val ptsChild = branch(dbl(pt), 1, 0, ptKeys, nulls(carryKeys) ++
+      accs.map(a => Alias(a.contrib, a.out.name)()),
+      keep(IsNotNull(pt), ptKeys, ptPlan))
     // probesLo FIRST: Union takes output attrs from its head child, so
     // the carried keys keep their ORIGINAL exprIds and the aggregate's
     // grouping expressions resolve unchanged
@@ -362,169 +263,72 @@ object RangeAggPrefix {
   }
 }
 
-/** Merged-event-stream prefix node. Child layout (positional):
-  * [v: double, tag: int, sign: int, ek_0..e-1, key_0..m-1,
-  *  c_0..k-1: long] — ek are the equi-key SORT columns (keyed form;
-  * e = 0 for the plain band), key the carried interval columns.
-  * Output: the m carried key columns (same attributes — pass-through)
-  * followed by k signed-prefix columns, ONE ROW PER PROBE. */
+/** Merged-event-stream prefix node. Payload (after the m carried
+  * interval key columns): c_0..k-1, the per-point contributions (long).
+  * Output: the carried key columns followed by k signed-prefix columns,
+  * ONE ROW PER PROBE. */
 case class RangeAggPrefixNode(nEquiKeys: Int, nKeys: Int,
                               accOut: Seq[AttributeReference],
-                              child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] =
-    child.output.slice(3 + nEquiKeys, 3 + nEquiKeys + nKeys) ++ accOut
-  // the signed-prefix columns are BORN here (the child's contribution
-  // columns are inputs, not the same attributes)
-  override def producedAttributes: AttributeSet = AttributeSet(accOut)
-  // the exec reads the child POSITIONALLY ([v, tag, sign, ekeys, keys,
-  // contribs]) — every child column is required, or ColumnPruning would
-  // slim the union under a count()-style parent and break the layout
-  override def references: AttributeSet = child.outputSet
+                              child: LogicalPlan) extends SortedStreamNode {
+  override protected def nCarried: Int = nKeys
+  override protected def produced: Seq[AttributeReference] = accOut
+  override def toExec(child: SparkPlan): SparkPlan =
+    RangeAggPrefixExec(nEquiKeys, nKeys, accOut, child)
   override protected def withNewChildInternal(newChild: LogicalPlan)
       : RangeAggPrefixNode = copy(child = newChild)
 }
 
-/** Physical prefix stitch. Requires the child globally range-sorted on
-  * (v, tag) — EnsureRequirements provides the stock sampled range
-  * exchange + per-partition sort. Two passes over the SAME shuffled
-  * child: job 1 per-partition contribution totals (one tiny row per
-  * partition to the driver), job 2 emits each probe's key columns plus
-  * sign × (partition offset + local running total). Job 1 re-runs the
-  * per-partition SORT it doesn't strictly need (totals are
-  * order-free) — deliberate: the expensive range EXCHANGE is reused
-  * across both jobs (shuffle files persist), and routing job 1 around
-  * the sort would need a second exchange of the full stream, which
-  * costs far more than re-sorting each partition in memory. */
+/** Physical prefix stitch. Summary: one partition's contribution totals
+  * (points only; order-free). Seeds: exclusive per-partition offsets.
+  * Emit: each probe's key columns plus sign × (offset + local running
+  * total). In the keyed form the unchanged global stitch is exact: other
+  * keys' points flank both probes of an interval and cancel in the
+  * difference, or follow both and touch neither. */
 case class RangeAggPrefixExec(nEquiKeys: Int, nKeys: Int,
                               accOut: Seq[AttributeReference],
-                              child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] =
-    child.output.slice(3 + nEquiKeys, 3 + nEquiKeys + nKeys) ++ accOut
-
-  override def producedAttributes: AttributeSet = AttributeSet(accOut)
-
+                              child: SparkPlan) extends SortedStreamExec {
   override def nodeName: String = "RangeAggPrefix"
+  override protected def nCarried: Int = nKeys
+  override protected def produced: Seq[AttributeReference] = accOut
 
-  // KEYED form: equi keys lead the sort, making each key one contiguous
-  // run — the global prefix stitch below is then exact with NO code
-  // change (other keys' points flank both probes of an interval and
-  // cancel in the difference, or follow both and touch neither)
-  private def streamOrder: Seq[SortOrder] =
-    (0 until nEquiKeys).map(i =>
-      SortOrder(child.output(3 + i), Ascending)) ++ Seq(
-    SortOrder(child.output(0), Ascending),
-    SortOrder(child.output(1), Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(streamOrder) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(streamOrder)
-
-  // the range partitioning below is on (v, tag), neither of which
-  // survives into the output — claim nothing
-  override def outputPartitioning
-      : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    UnknownPartitioning(0)
-
-  override protected def doExecute(): RDD[InternalRow] = {
+  override protected def scan(): Scan[Array[Long], Array[Long]] = {
     val k = accOut.length
     val m = nKeys
-    val base = 3 + nEquiKeys // first carried-key ordinal
-    val cBase = base + m     // first contribution ordinal
-    val childOut = child.output
-    require(childOut(0).dataType == DoubleType &&
-      childOut(1).dataType == IntegerType &&
-      childOut(2).dataType == IntegerType,
-      s"RangeAggPrefix child layout violated: ${childOut.take(3)}")
-    val keyTypes = childOut.slice(base, base + m).map(_.dataType).toArray
-    val outTypes = (keyTypes ++ Array.fill(k)(LongType: DataType)).toArray
-    val rdd = child.execute()
-    val nParts = rdd.getNumPartitions
-
-    // job 1: per-partition contribution totals (points only)
-    val totals = rdd.mapPartitions { it =>
-      val acc = new Array[Long](k)
-      it.foreach { row =>
-        if (row.getInt(2) == 0) {
-          var i = 0
-          while (i < k) {
-            acc(i) = RangeAggPrefixExec.addX(acc(i), row.getLong(cBase + i))
-            i += 1
-          }
-        }
-      }
-      Iterator.single((TaskContext.getPartitionId(), acc))
-    }.collect()
-
-    // exclusive per-partition offsets (driver state: nParts × k longs)
-    val offsets = Array.fill(nParts)(new Array[Long](k))
-    val running = new Array[Long](k)
-    totals.sortBy(_._1).foreach { case (pid, t) =>
-      offsets(pid) = running.clone()
+    val base = Head + nEquiKeys // first carried-key ordinal
+    val cBase = base + m        // first contribution ordinal
+    val keyTypes = child.output.slice(base, base + m).map(_.dataType).toArray
+    val outTypes: Array[DataType] = keyTypes ++ Array.fill(k)(LongType)
+    def add(run: Array[Long], row: InternalRow): Unit = {
       var i = 0
-      while (i < k) {
-        running(i) = RangeAggPrefixExec.addX(running(i), t(i)); i += 1
-      }
+      while (i < k) { run(i) = addX(run(i), row.getLong(cBase + i)); i += 1 }
     }
-
-    // job 2: same shuffle output (exchange reuse), seeded running
-    // totals; emit one output row per probe
-    rdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val run = offsets(pid).clone()
-      val proj = UnsafeProjection.create(outTypes)
-      val out = new GenericInternalRow(m + k)
-      it.flatMap { row =>
-        val sign = row.getInt(2)
-        if (sign == 0) {
-          var i = 0
-          while (i < k) {
-            run(i) = RangeAggPrefixExec.addX(run(i), row.getLong(cBase + i))
-            i += 1
+    Scan[Array[Long], Array[Long]](
+      summary = { it =>
+        val acc = new Array[Long](k)
+        it.foreach(row => if (row.getInt(2) == 0) add(acc, row))
+        acc
+      },
+      seeds = totals => totals.scanLeft(new Array[Long](k))((run, t) =>
+        Array.tabulate(k)(i => addX(run(i), t(i)))).init,
+      emit = { (offset, it) =>
+        val run = offset.clone()
+        val proj = UnsafeProjection.create(outTypes)
+        val out = new GenericInternalRow(m + k)
+        it.flatMap { row =>
+          val sign = row.getInt(2)
+          if (sign == 0) { add(run, row); Iterator.empty }
+          else {
+            passThrough(row, base, keyTypes, out)
+            var j = 0
+            while (j < k) {
+              out.update(m + j, if (sign > 0) run(j) else -run(j)); j += 1
+            }
+            Iterator.single[InternalRow](proj(out))
           }
-          Iterator.empty
-        } else {
-          var i = 0
-          while (i < m) {
-            out.update(i, if (row.isNullAt(base + i)) null
-              else row.get(base + i, keyTypes(i)))
-            i += 1
-          }
-          var j = 0
-          while (j < k) {
-            out.update(m + j, if (sign > 0) run(j) else -run(j))
-            j += 1
-          }
-          Iterator.single[InternalRow](proj(out))
         }
-      }
-    }
+      })
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)
       : RangeAggPrefixExec = copy(child = newChild)
-}
-
-object RangeAggPrefixExec {
-  /** Exact add: a silent wrap would corrupt every downstream prefix, so
-    * overflow fails loudly with the escape hatch named. The bound is
-    * the CORPUS-WIDE running total — every point's contribution passes
-    * through one global prefix, so a query whose per-GROUP sums are
-    * tiny still trips this once the whole corpus' sum column passes
-    * 2^63 unscaled units (where the pair-join plan would succeed).
-    * Deliberate: wrapping mod 2^64 would match the join form for
-    * integral sums in non-ANSI mode but be silently wrong for decimal
-    * sums whose group totals exceed a long, and loud-never-wrong wins. */
-  private[plans] def addX(a: Long, b: Long): Long =
-    try Math.addExact(a, b)
-    catch {
-      case _: ArithmeticException => throw new ArithmeticException(
-        "graft range-agg prefix: 64-bit accumulator overflow - the " +
-          "CORPUS-WIDE total of a sum column passed 2^63 unscaled " +
-          "units (the running prefix is global, so this can fire even " +
-          "when every per-group sum is small); set " +
-          "spark.graft.rangeJoin.aggPrefix=false to fall back to the " +
-          "pair-join plan")
-    }
 }

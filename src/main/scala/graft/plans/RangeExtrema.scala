@@ -1,14 +1,12 @@
 package graft.plans
 
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Max}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, UnaryNode, Union}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, UnknownPartitioning}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Union}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
+import SortedStream._
 
 /** Join-free per-interval MIN/MAX of the point value (r18 — VERDICT r17
   * Next #3's "ship it" arm).
@@ -22,11 +20,12 @@ import org.apache.spark.sql.types._
   *   max{pt : lo ≤ pt ≤ hi} = (last point value ≤ hi), valid iff ≥ lo
   *
   * So one scan of the same merged stream RangeAggPrefix sorts — points
-  * and hi-probes ordered by (v, tag), tag placing an inclusive probe
-  * AFTER equal-valued points and a strict one BEFORE — maintains a
-  * running "last point value seen" and emits it at every probe, with
-  * the probe's OWN lo carried on the row so validity (pred ≥ lo, or
-  * > for a strict lo) is a row-local filter. min falls out by
+  * and hi-probes ordered by (v, tag), tag placing the (inclusive) probe
+  * AFTER equal-valued points — maintains a running "last point value
+  * seen" and emits it at every probe, with the probe's OWN lo carried
+  * on the row so validity (pred ≥ lo) is a row-local filter. Both
+  * bounds are inclusive: the operator layer asks for nothing else.
+  * min falls out by
   * NEGATION: min{pt ∈ [lo, hi]} = −max{−pt ∈ [−hi, −lo]} — the same
   * plan over the negated stream.
   *
@@ -38,21 +37,14 @@ import org.apache.spark.sql.types._
   * A group with no valid row aggregates to null and the inner-join
   * Filter drops it.
   *
-  * Distribution: the stock range exchange + sort (OrderedDistribution
-  * on (v, tag), same as RangeAggPrefix); job 1 collects one (hasPoint,
-  * lastV) pair per partition, the driver folds them into per-partition
-  * seed values (running last across preceding partitions), job 2
-  * re-reads the same shuffle output and emits one row per probe.
-  * Driver state: numPartitions × (bool, double) — the bounded-state
-  * contract. No pair is ever materialized; cost is O((n+q) log),
-  * independent of band density — the property the pair-enumerating
-  * plans (910–1502 s at ×100 on the j7 fixture) lack.
+  * The scan ([[SortedStream]]) keeps a running "last point value" per
+  * partition: job 1 collects one (last key…, last value) per partition,
+  * the driver folds them into per-partition seeds (running last across
+  * preceding partitions), job 2 emits one row per probe. Driver state:
+  * numPartitions × (e + 1) values.
   *
-  * NaN: points stay (same argument as RangeAggPrefix r18) — NaN points
-  * sort last, an inclusive hi = NaN probe sorts after them and reads
-  * pred = NaN, validity NaN ≥ lo is true under Spark's total order,
-  * and SQL's max over a set containing NaN is NaN: all consistent with
-  * the join form. −0.0 is normalized to +0.0 by the same dbl() image.
+  * NaN points are left out of both scans and re-attached by the
+  * operator layer (see [[tryBuildSingle]]).
   *
   * Scope: extrema of an ARBITRARY pt-side column (`max(amount)` over
   * events in range) are NOT a predecessor query — r19 ships them as
@@ -63,132 +55,6 @@ import org.apache.spark.sql.types._
   * scan vs buffering each partition's points. */
 object RangeExtrema {
 
-  private def dbl(e: Expression): Expression =
-    Add(Cast(e, DoubleType), Literal(0.0))
-
-  private def orderExact(e: Expression): Boolean = e.dataType match {
-    case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
-
-  /** One single-extreme plan: emits per-group
-    * `Max(valid predecessor)` rows — the MAX of FINITE-OR-±∞ (never
-    * NaN) `pt ∈ [lo, hi]` per carried key, pre-Filter (null = group
-    * has no such point). `neg = true` computes the MIN via negation.
-    *
-    * NaN points are excluded from BOTH streams here: arithmetic
-    * negation reverses the total order on [−∞, +∞] but NOT at NaN
-    * (−NaN = NaN still sorts last), so the negated stream would place
-    * NaN points where the min scan cannot see them. The operator layer
-    * re-attaches the NaN-qualifying groups (hi = NaN intervals × any
-    * NaN point existing) from two tiny aggregates — see
-    * [[graft.ops.RangeAgg.extremaInRangeAgg]]. NaN BOUNDS are handled
-    * in-plan: a NaN-hi probe in the max plan sits after every finite
-    * point (correct upper limit = everything) with its validity
-    * comparison untouched; in the min plan the carried lower bound
-    * maps NaN-hi to −∞ (pt ≤ NaN is vacuously true for finite points),
-    * and a NaN-lo probe self-excludes in BOTH plans via a NaN carried
-    * bound (finite pred ≥ NaN is false): naturally in the max plan
-    * (its carried bound IS the lo), explicitly in the min plan —
-    * there lo is the PROBE position, and −NaN = NaN still sorts after
-    * every finite value, so without the explicit mapping a duplicate
-    * id's min would absorb the stream minimum (r18 review finding).
-    * Only NaN points satisfy pt ≥ NaN, and those are the operator
-    * layer's branch.
-    *
-    * Output: carryKeys ++ [ext: double]. */
-  private def singleExtreme(carryKeys: Seq[Attribute],
-                            pt: Expression, lower: Expression,
-                            upper: Expression, lowerStrict: Boolean,
-                            upperStrict: Boolean, neg: Boolean,
-                            ptPlan: LogicalPlan, ivPlan: LogicalPlan,
-                            extName: String,
-                            equiKeys: Seq[(Expression, Expression)] = Nil)
-      : (LogicalPlan, Alias) = {
-    def img(e: Expression): Expression =
-      if (neg) UnaryMinus(dbl(e)) else dbl(e)
-    // domain mapping: the negated stream's UPPER end is the original
-    // LOWER bound (min{pt ∈ [lo, hi]} = −max{−pt ∈ [−hi, −lo]}) — the
-    // probe sits at the stream position of the negated-domain upper,
-    // and the validity constraint comes from the other bound
-    val probeSrc = if (neg) lower else upper
-    val probeStrict = if (neg) lowerStrict else upperStrict
-    val validSrc = if (neg) upper else lower
-    val validStrict = if (neg) upperStrict else lowerStrict
-    // inclusive → probe after equal-valued points (tag 2), strict →
-    // before (tag 0): its predecessor is the candidate answer
-    val probeTag = Literal(if (probeStrict) 0 else 2)
-    // non-empty band filter, same as the prefix plan: strict-strict
-    // degenerate [x, x] matches nothing
-    val keep0 =
-      if (lowerStrict && upperStrict) LessThan(dbl(lower), dbl(upper))
-      else LessThanOrEqual(dbl(lower), dbl(upper))
-    // a null equi key never matches (SQL `=`): drop on both sides
-    val keep = equiKeys.map(_._2).map(IsNotNull)
-      .foldLeft[Expression](keep0)(And(_, _))
-    val ivF = Filter(keep, ivPlan)
-    // the validity bound carried on the probe: in the negated (min)
-    // plan the original constraint is pt ≤ hi, whose image would be
-    // −NaN = NaN for a NaN hi — map it to −∞ instead (vacuously true
-    // for every finite point, exactly like the original constraint).
-    // A NaN PROBE-side bound (lo = NaN in the min plan) must instead
-    // make the row self-exclude: pt ≥ NaN admits no finite point, but
-    // position alone can't encode that here (−NaN = NaN still sorts
-    // after every finite x, so the probe would read the global last
-    // value — for duplicate ids that contaminated min_v with the
-    // stream minimum until r18's review caught it). NaN as the carried
-    // bound kills validity for every finite pred — the max plan
-    // already self-excludes this way because ITS carried bound is the
-    // NaN lo itself.
-    val carriedLower: Expression =
-      if (neg) If(IsNaN(dbl(probeSrc)), Literal(Double.NaN),
-        If(IsNaN(dbl(validSrc)), Literal(Double.NegativeInfinity),
-          UnaryMinus(dbl(validSrc))))
-      else dbl(validSrc)
-    // equi keys are NOT negated in the min plan: they provide run
-    // contiguity (equality), not order, and ascending key order is the
-    // same partition of the stream either way
-    val probes = Project(Seq(Alias(img(probeSrc), "_graft_v")(),
-      Alias(probeTag, "_graft_tag")(),
-      Alias(Literal(1), "_graft_probe")()) ++
-      equiKeys.zipWithIndex.map { case ((_, ik), i) =>
-        Alias(RangeAggPrefix.normKey(ik), s"_graft_k$i")() } ++
-      carryKeys ++
-      Seq(Alias(carriedLower, "_graft_lo")()), ivF)
-    val ptF = Filter(equiKeys.map(_._1).map(IsNotNull)
-      .foldLeft[Expression](And(IsNotNull(pt), Not(IsNaN(dbl(pt)))))(
-        And(_, _)), ptPlan)
-    val points = Project(Seq(Alias(img(pt), "_graft_v")(),
-      Alias(Literal(1), "_graft_tag")(),
-      Alias(Literal(0), "_graft_probe")()) ++
-      equiKeys.zipWithIndex.map { case ((pk, _), i) =>
-        Alias(RangeAggPrefix.normKey(pk), s"_graft_k$i")() } ++
-      carryKeys.map(ka => Alias(Literal(null, ka.dataType), ka.name)()) ++
-      Seq(Alias(Literal(null, DoubleType), "_graft_lo")()), ptF)
-    // probes FIRST: Union takes output attributes from its head child,
-    // so the carried keys keep their original exprIds
-    val union = Union(Seq(probes, points), byName = false,
-      allowMissingCol = false)
-    val predOut = AttributeReference("_graft_pred", DoubleType,
-      nullable = true)()
-    val node = RangeExtremaNode(equiKeys.length, carryKeys.length,
-      predOut, union)
-    // row-local validity: pred within the lower bound (in the possibly
-    // negated image); invalid/empty probes contribute null, which Max
-    // ignores — exactly the join form's membership
-    val loAttr = node.output(carryKeys.length) // the carried _graft_lo
-    val validCmp =
-      if (validStrict) GreaterThan(predOut, loAttr)
-      else GreaterThanOrEqual(predOut, loAttr)
-    val valid = If(And(IsNotNull(predOut), validCmp), predOut,
-      Literal(null, DoubleType))
-    val extRaw = AggregateExpression(Max(valid), Complete,
-      isDistinct = false)
-    val ext = Alias(if (neg) UnaryMinus(extRaw) else extRaw, extName)()
-    (Aggregate(carryKeys, (carryKeys: Seq[NamedExpression]) :+ ext, node),
-      ext)
-  }
-
   /** One single-extreme plan for the operator layer: per carried key,
     * MAX of `pt ∈ [lo, hi]` (inclusive both ends) when `neg = false`,
     * MIN when `neg = true` — keys with zero qualifying points dropped
@@ -196,234 +62,172 @@ object RangeExtrema {
     * caller composes min+max through the DataFrame join API (analyzer
     * self-join dedup handles the shared lineage; a raw logical Join of
     * the two branches would collide exprIds). None when pt/lo/hi are
-    * not double-order-exact. */
+    * not double-order-exact or a key is not sort-exact.
+    *
+    * The answer is the MAX of FINITE-OR-±∞ (never NaN) points: NaN
+    * points are excluded from BOTH streams here, because arithmetic
+    * negation reverses the total order on [−∞, +∞] but NOT at NaN
+    * (−NaN = NaN still sorts last), so the negated stream would place
+    * NaN points where the min scan cannot see them. The operator layer
+    * re-attaches the NaN-qualifying groups (hi = NaN intervals × any NaN
+    * point existing) from two tiny aggregates — see
+    * [[graft.ops.RangeAgg.extremaInRangeAgg]]. NaN BOUNDS are handled
+    * in-plan: a NaN-hi probe in the max plan sits after every finite
+    * point (correct upper limit = everything) with its validity
+    * comparison untouched; in the min plan the carried lower bound maps
+    * NaN-hi to −∞ (pt ≤ NaN is vacuously true for finite points), and a
+    * NaN-lo probe self-excludes in BOTH plans via a NaN carried bound
+    * (finite pred ≥ NaN is false): naturally in the max plan (its
+    * carried bound IS the lo), explicitly in the min plan — there lo is
+    * the PROBE position, and −NaN = NaN still sorts after every finite
+    * value, so without the explicit mapping a duplicate id's min would
+    * absorb the stream minimum. Only NaN points
+    * satisfy pt ≥ NaN, and those are the operator layer's branch. */
   def tryBuildSingle(keyAttrs: Seq[Attribute], pt: Expression,
                      lo: Expression, hi: Expression, neg: Boolean,
                      ptPlan: LogicalPlan, ivPlan: LogicalPlan,
                      extName: String,
                      equiKeys: Seq[(Expression, Expression)] = Nil)
       : Option[LogicalPlan] = {
-    if (!Seq(pt, lo, hi).forall(orderExact)) return None
-    if (!Seq(pt, lo, hi).forall(_.deterministic)) return None
-    if (!equiKeys.forall { case (pk, ik) =>
-          pk.deterministic && ik.deterministic &&
-          RangeAggPrefix.sortKeyExact(pk) &&
-          RangeAggPrefix.sortKeyExact(ik) &&
-          pk.dataType == ik.dataType &&
-          pk.references.nonEmpty &&
-          pk.references.subsetOf(ptPlan.outputSet) &&
-          ik.references.nonEmpty &&
-          ik.references.subsetOf(ivPlan.outputSet) }) return None
-    val (plan, ext) = singleExtreme(keyAttrs, pt, lo, hi,
-      lowerStrict = false, upperStrict = false, neg = neg,
-      ptPlan, ivPlan, extName, equiKeys)
-    Some(Filter(IsNotNull(ext.toAttribute), plan))
+    if (!bandExact(pt, lo, hi) || !keysExact(equiKeys, ptPlan, ivPlan))
+      return None
+    def img(e: Expression): Expression =
+      if (neg) UnaryMinus(dbl(e)) else dbl(e)
+    // domain mapping: the negated stream's UPPER end is the original
+    // LOWER bound (min{pt ∈ [lo, hi]} = −max{−pt ∈ [−hi, −lo]}) — the
+    // probe sits at the stream position of the negated-domain upper,
+    // and the validity constraint comes from the other bound
+    val probeSrc = if (neg) lo else hi
+    val validSrc = if (neg) hi else lo
+    // the validity bound carried on the probe: in the negated (min)
+    // plan the original constraint is pt ≤ hi, whose image would be
+    // −NaN = NaN for a NaN hi — map it to −∞ instead (vacuously true
+    // for every finite point, exactly like the original constraint).
+    // A NaN PROBE-side bound (lo = NaN in the min plan) must instead
+    // make the row self-exclude: NaN as the carried bound kills
+    // validity for every finite pred.
+    val carriedLower: Expression =
+      if (neg) If(IsNaN(dbl(probeSrc)), Literal(Double.NaN),
+        If(IsNaN(dbl(validSrc)), Literal(Double.NegativeInfinity),
+          UnaryMinus(dbl(validSrc))))
+      else dbl(validSrc)
+    // equi keys are NOT negated in the min plan: they provide run
+    // contiguity (equality), not order. Inclusive probes (tag 2) sort
+    // after equal-valued points: their predecessor is the candidate.
+    val ivKeys = equiKeys.map(_._2)
+    val ptKeys = equiKeys.map(_._1)
+    val probes = branch(img(probeSrc), 2, 1, ivKeys,
+      keyAttrs :+ Alias(carriedLower, "_graft_lo")(),
+      keep(nonEmptyBand(lo, hi, strict = false), ivKeys, ivPlan))
+    val points = branch(img(pt), 1, 0, ptKeys,
+      nulls(keyAttrs) :+ Alias(Literal(null, DoubleType), "_graft_lo")(),
+      keep(And(IsNotNull(pt), Not(IsNaN(dbl(pt)))), ptKeys, ptPlan))
+    // probes FIRST: Union takes output attributes from its head child,
+    // so the carried keys keep their original exprIds
+    val union = Union(Seq(probes, points), byName = false,
+      allowMissingCol = false)
+    val predOut = AttributeReference("_graft_pred", DoubleType,
+      nullable = true)()
+    val node = RangeExtremaNode(equiKeys.length, keyAttrs.length,
+      predOut, union)
+    // row-local validity: pred within the lower bound (in the possibly
+    // negated image); invalid/empty probes contribute null, which Max
+    // ignores — exactly the join form's membership
+    val loAttr = node.output(keyAttrs.length) // the carried _graft_lo
+    val valid = If(And(IsNotNull(predOut),
+      GreaterThanOrEqual(predOut, loAttr)), predOut, Literal(null, DoubleType))
+    val extRaw = AggregateExpression(Max(valid), Complete, isDistinct = false)
+    val ext = Alias(if (neg) UnaryMinus(extRaw) else extRaw, extName)()
+    Some(Filter(IsNotNull(ext.toAttribute),
+      Aggregate(keyAttrs, (keyAttrs: Seq[NamedExpression]) :+ ext, node)))
   }
 }
 
-/** Merged-stream predecessor node. Child layout (positional):
-  * [v: double, tag: int, probe: int, ek_0..e-1, key_0..m-1,
-  *  lo: double] — ek are the equi-key sort columns (keyed form; e = 0
-  * for the plain band). Output: the m carried keys + lo
-  * (pass-through) followed by the running last point value (`pred`),
-  * ONE ROW PER PROBE. In the keyed form the stream sorts by
-  * (ek…, v, tag), and a probe's predecessor is valid exactly when the
-  * LAST POINT'S equi key equals the probe's — the last point before a
-  * probe in this order has key ≤ the probe's key, with equality iff
-  * it belongs to the same key run, so no run-boundary reset is needed:
-  * the exec just carries the last point's key in its scan state. */
+/** Merged-stream predecessor node. Carried (after the equi keys): the m
+  * interval key columns and the probe's lo. Output: those followed by
+  * the running last point value (`pred`), ONE ROW PER PROBE. In the
+  * keyed form a probe's predecessor is valid exactly when the LAST
+  * POINT'S equi key equals the probe's — the last point before a probe
+  * has key ≤ the probe's key, with equality iff it belongs to the same
+  * key run, so no run-boundary reset is needed: the exec just carries
+  * the last point's key in its scan state. */
 case class RangeExtremaNode(nEquiKeys: Int, nKeys: Int,
                             predOut: AttributeReference,
-                            child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] =
-    child.output.slice(3 + nEquiKeys, 3 + nEquiKeys + nKeys + 1) :+ predOut
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(predOut))
-  // positional layout: every child column is required (see
-  // RangeAggPrefixNode for why ColumnPruning must be blocked)
-  override def references: AttributeSet = child.outputSet
+                            child: LogicalPlan) extends SortedStreamNode {
+  override protected def nCarried: Int = nKeys + 1
+  override protected def produced: Seq[AttributeReference] = Seq(predOut)
+  override def toExec(child: SparkPlan): SparkPlan =
+    RangeExtremaExec(nEquiKeys, nKeys, predOut, child)
   override protected def withNewChildInternal(newChild: LogicalPlan)
       : RangeExtremaNode = copy(child = newChild)
 }
 
-/** Physical predecessor scan: requires the child range-sorted on
-  * (ek…, v, tag); job 1 collects one (hasPoint, lastKey…, lastV) per
-  * partition, job 2 re-reads the same shuffle output seeded with each
-  * partition's predecessor-so-far and emits one row per probe. In the
-  * keyed form the scan additionally carries the LAST POINT'S equi key:
-  * a probe's predecessor is valid iff that key equals the probe's own
-  * (the last point before a probe has key ≤ the probe's key in the
-  * lexicographic sort, equal exactly within the probe's run). Key
-  * equality is bit-exact per type — doubles/floats compare via their
-  * raw-bits image so every NaN equals every NaN (Spark `=` semantics;
-  * a boxed `==` would say NaN ≠ NaN) and −0.0 was already normalized
-  * to +0.0 in the stream image; strings are copied out of the reused
-  * UnsafeRow buffer before being held across rows. */
+/** Physical predecessor scan. Summary: one partition's last point
+  * (key…, value), or None when it has no point. Seeds: the last point
+  * of any preceding partition. Emit: each probe's carried columns plus
+  * the running last value when the last point shares the probe's equi
+  * key, else null. */
 case class RangeExtremaExec(nEquiKeys: Int, nKeys: Int,
                             predOut: AttributeReference,
-                            child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] =
-    child.output.slice(3 + nEquiKeys, 3 + nEquiKeys + nKeys + 1) :+ predOut
-
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(predOut))
-
+                            child: SparkPlan) extends SortedStreamExec {
   override def nodeName: String = "RangeExtrema"
+  override protected def nCarried: Int = nKeys + 1
+  override protected def produced: Seq[AttributeReference] = Seq(predOut)
 
-  private def streamOrder: Seq[SortOrder] =
-    (0 until nEquiKeys).map(i =>
-      SortOrder(child.output(3 + i), Ascending)) ++ Seq(
-    SortOrder(child.output(0), Ascending),
-    SortOrder(child.output(1), Ascending))
+  /** A partition's last point (equi keys, value), if it has one. */
+  type Last = Option[(Array[Any], Double)]
 
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(streamOrder) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(streamOrder)
-
-  override def outputPartitioning
-      : org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    UnknownPartitioning(0)
-
-  override protected def doExecute(): RDD[InternalRow] = {
+  override protected def scan(): Scan[Last, Last] = {
     val e = nEquiKeys
-    val m = nKeys + 1 // carried keys + the lo column
-    val base = 3 + e  // first carried-key ordinal
-    val childOut = child.output
-    require(childOut(0).dataType == DoubleType &&
-      childOut(1).dataType == IntegerType &&
-      childOut(2).dataType == IntegerType,
-      s"RangeExtrema child layout violated: ${childOut.take(3)}")
-    val ekTypes = childOut.slice(3, 3 + e).map(_.dataType).toArray
-    val keyTypes = childOut.slice(base, base + m).map(_.dataType).toArray
-    val outTypes = (keyTypes :+ (DoubleType: DataType)).toArray
-    val rdd = child.execute()
-    val nParts = rdd.getNumPartitions
-
-    // own a key value for retention across rows: rows from a shuffle
-    // iterator reuse their backing buffer, so variable-length values
-    // must be copied before being HELD — but only when held (see
-    // keyRowEq)
-    def own(v: Any): Any = v match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
-      case other => other
-    }
-    // allocation-free equality of the row's key ordinal against an
-    // OWNED previous value, matching Spark's `=`: NaN = NaN (raw-bits
-    // compare; −0.0 already normalized in the stream image), strings
-    // content-compared in place (UTF8String.equals reads the reused
-    // buffer without copying). Key runs are contiguous in the stream
-    // sort, so the compare-then-copy pattern below copies once per
-    // RUN, not once per row — the r18 form allocated a boxed array +
-    // string copies for EVERY point row (r19 ADVICE item).
-    def keyRowEq(dt: DataType, row: InternalRow, ord: Int, b: Any)
-        : Boolean =
-      if (b == null) row.isNullAt(ord)
-      else if (row.isNullAt(ord)) false
-      else dt match {
-        case DoubleType => java.lang.Double.doubleToLongBits(
-          row.getDouble(ord)) == java.lang.Double.doubleToLongBits(
-          b.asInstanceOf[Double])
-        case FloatType => java.lang.Float.floatToIntBits(
-          row.getFloat(ord)) == java.lang.Float.floatToIntBits(
-          b.asInstanceOf[Float])
-        case _ => row.get(ord, dt) == b
-      }
-    // compare-then-copy a point row's keys into the owned scratch
-    def updateKeys(row: InternalRow, keys: Array[Any],
-                   valid: Boolean): Unit = {
-      var i = 0
-      while (i < e) {
-        if (!valid || !keyRowEq(ekTypes(i), row, 3 + i, keys(i)))
-          keys(i) = own(row.get(3 + i, ekTypes(i)))
-        i += 1
-      }
-    }
-    // bit-exact per-type equality of two OWNED values (driver fold)
-    def keyEq(dt: DataType, a: Any, b: Any): Boolean = dt match {
-      case DoubleType => java.lang.Double.doubleToLongBits(
-        a.asInstanceOf[Double]) == java.lang.Double.doubleToLongBits(
-        b.asInstanceOf[Double])
-      case FloatType => java.lang.Float.floatToIntBits(
-        a.asInstanceOf[Float]) == java.lang.Float.floatToIntBits(
-        b.asInstanceOf[Float])
-      case _ => a == b
-    }
-
-    // job 1: per-partition last point (key…, value) — order matters
-    // here, unlike the prefix totals: the per-partition sort re-runs;
-    // the expensive range exchange is reused, same trade as
-    // RangeAggPrefix job 1
-    val partLast: Array[(Int, Boolean, Array[Any], Double)] =
-      rdd.mapPartitions { it =>
+    val base = Head + e // first carried ordinal
+    val ekTypes = child.output.slice(Head, base).map(_.dataType).toArray
+    val keyTypes =
+      child.output.slice(base, base + nKeys + 1).map(_.dataType).toArray
+    val m = keyTypes.length
+    val outTypes: Array[DataType] = keyTypes :+ DoubleType
+    Scan[Last, Last](
+      summary = { it =>
         var has = false
         var last = 0.0
-        val keys: Array[Any] = if (e > 0) new Array[Any](e) else null
+        val keys = new Array[Any](e)
         it.foreach { row =>
           if (row.getInt(2) == 0) {
-            if (e > 0) updateKeys(row, keys, valid = has)
+            holdKeys(row, ekTypes, keys, valid = has)
             has = true; last = row.getDouble(0)
           }
         }
-        Iterator.single((TaskContext.getPartitionId(), has,
-          if (has) keys else null, last))
-      }.collect()
-
-    // seed for partition p = last point (key…, value) in any preceding
-    // partition (driver state: nParts × (e + 1) values)
-    val seedHas = new Array[Boolean](nParts)
-    val seedKeys = new Array[Array[Any]](nParts)
-    val seedVal = new Array[Double](nParts)
-    var runHas = false
-    var runKeys: Array[Any] = null
-    var runVal = 0.0
-    partLast.sortBy(_._1).foreach { case (pid, has, keys, last) =>
-      seedHas(pid) = runHas
-      seedKeys(pid) = runKeys
-      seedVal(pid) = runVal
-      if (has) { runHas = true; runKeys = keys; runVal = last }
-    }
-
-    // job 2: same shuffle output, seeded running last; emit per probe
-    rdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var has = seedHas(pid)
-      var last = seedVal(pid)
-      // local owned scratch, seeded with the preceding partitions'
-      // last key (the seed arrays live in the deserialized closure,
-      // but copying keeps each task's mutation strictly local)
-      val lastKeys: Array[Any] = if (e > 0) new Array[Any](e) else null
-      if (e > 0 && seedKeys(pid) != null)
-        Array.copy(seedKeys(pid), 0, lastKeys, 0, e)
-      val proj = UnsafeProjection.create(outTypes)
-      val out = new GenericInternalRow(m + 1)
-      it.flatMap { row =>
-        if (row.getInt(2) == 0) {
-          if (e > 0) updateKeys(row, lastKeys, valid = has)
-          has = true; last = row.getDouble(0)
-          Iterator.empty
-        } else {
-          var i = 0
-          while (i < m) {
-            out.update(i, if (row.isNullAt(base + i)) null
-              else row.get(base + i, keyTypes(i)))
-            i += 1
-          }
-          // keyed validity: the predecessor belongs to this probe's
-          // key run iff the last point's key equals the probe's —
-          // compared in place against the owned scratch, no allocation
-          var sameRun = has
-          if (sameRun && e > 0) {
+        if (has) Some((keys, last)) else None
+      },
+      seeds = parts =>
+        parts.scanLeft(None: Last)((acc, p) => p.orElse(acc)).init,
+      emit = { (seed, it) =>
+        var has = seed.isDefined
+        var last = seed.fold(0.0)(_._2)
+        // task-local owned scratch, seeded with the preceding
+        // partitions' last key
+        val lastKeys = seed.fold(new Array[Any](e))(_._1.clone())
+        val proj = UnsafeProjection.create(outTypes)
+        val out = new GenericInternalRow(m + 1)
+        it.flatMap { row =>
+          if (row.getInt(2) == 0) {
+            holdKeys(row, ekTypes, lastKeys, valid = has)
+            has = true; last = row.getDouble(0)
+            Iterator.empty
+          } else {
+            passThrough(row, base, keyTypes, out)
+            // keyed validity: the predecessor belongs to this probe's
+            // key run iff the last point's key equals the probe's
+            var sameRun = has
             var k = 0
             while (sameRun && k < e) {
-              sameRun = keyRowEq(ekTypes(k), row, 3 + k, lastKeys(k))
+              sameRun = keyRowEq(ekTypes(k), row, Head + k, lastKeys(k))
               k += 1
             }
+            out.update(m, if (sameRun) last else null)
+            Iterator.single[InternalRow](proj(out))
           }
-          out.update(m, if (sameRun) last else null)
-          Iterator.single[InternalRow](proj(out))
         }
-      }
-    }
+      })
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan)

@@ -185,13 +185,7 @@ case class TopKPerGroupExec(groupCols: Seq[Attribute], order: Seq[SortOrder],
 
 object GraftStrategies extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case RangeAggPrefixNode(nEquiKeys, nKeys, accOut, child) =>
-      RangeAggPrefixExec(nEquiKeys, nKeys, accOut, planLater(child)) :: Nil
-    case RangeExtremaNode(nEquiKeys, nKeys, predOut, child) =>
-      RangeExtremaExec(nEquiKeys, nKeys, predOut, planLater(child)) :: Nil
-    case RangeValueExtremaNode(nEquiKeys, nKeys, maxOut, minOut, child) =>
-      RangeValueExtremaExec(nEquiKeys, nKeys, maxOut, minOut,
-        planLater(child)) :: Nil
+    case n: SortedStreamNode => n.toExec(planLater(n.child)) :: Nil
     case TopKPerGroupNode(g, o, k, child, budget) =>
       // two-phase by default: the partial exec caps each mapper at k
       // rows per group, EnsureRequirements puts the group-key exchange

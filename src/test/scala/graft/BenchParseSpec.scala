@@ -195,6 +195,21 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.parsePrevTimes(c).isEmpty, Bench.parsePrevTimes(c).toString)
   }
 
+  test("string fields are JSON-escaped: an SF dir with a quote and a backslash") {
+    val dir = "/data/sf\"0.1\\x"
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (queries <- Seq("", "\"queries\":{\"q1\":1.500},")) {
+      val line = Bench.compactLine(total = 1.5, nOk = 1, nFail = 0,
+        sfDir = dir, sweepNote = "q1=1.60x", escalated = false,
+        loadStart = 0.5, loadEnd = 0.5, loadWaited = 0, contended = false,
+        anchor = "none", idleRetries = 0, gatePayer = "a=b",
+        queries = queries)
+      val parsed = json.readTree(line)
+      assert(parsed.get("sf").asText == dir, line)
+      assert(parsed.has("queries") == queries.nonEmpty, line)
+    }
+  }
+
   test("r19 artifact fields (anchor, idle_retries) never parse as query times") {
     // anchor is a QUOTED decimal and idle_retries an un-dotted int —
     // neither matches the "name":1.23 shape — and both sit in

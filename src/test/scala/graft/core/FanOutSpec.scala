@@ -47,6 +47,15 @@ class FanOutSpec extends SparkSpec {
       .findAllIn(twice.queryExecution.analyzed.toString).size == 1)
   }
 
+  test("sortWithinPartitions still fans out; a global orderBy does not") {
+    // only the global sort shuffles: a one-split scan sorted within its
+    // partition is still pinned to one task
+    assert(fanned(Tables.fanOut(docs.sortWithinPartitions("doc_id"),
+      col("doc_id"))))
+    val sorted = docs.orderBy("doc_id")
+    assert(Tables.fanOut(sorted, col("doc_id")) eq sorted)
+  }
+
   test("local (non-file) and streaming-shaped frames are untouched") {
     val local = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
     assert(!fanned(Tables.fanOut(local, col("doc_id"))))
