@@ -167,12 +167,8 @@ object PlanAudit {
       "no ScalaUDF" -> (p => !p.contains("ScalaUDF"))))(
       SparkEntry.queries("llm_pq_topk")(spark, dir))
 
-    // round 4 rewrote the curve onto the graft_nn_topk matrix-literal
-    // heap-select (no n²-row join); the old graft_l2_dist check was stale
-    audit("m3_knn_curve (native matrix heap-select kernel)", Seq(
-      "native graft_nn_topk in plan" -> (_.contains("graft_nn_topk")),
-      "no interpreted HOF fold" -> (p => !p.contains("aggregate(zip_with"))))(
-      SparkEntry.queries("m3_knn_curve")(spark, dir))
+    // m3_knn_curve's plan shape (a local frame: no shuffle, no window)
+    // is a typed spec in PipelineSpec
 
     // r10: the approx curve's candidate stream must stay id-only — the
     // n-row vector side broadcasts for the attach (the un-broadcast form

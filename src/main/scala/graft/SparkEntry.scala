@@ -432,14 +432,13 @@ object SparkEntry {
         if (n > curveCap) vecs.sample(withReplacement = false,
           curveCap.toDouble / n, seed = 42L)
         else vecs
-      val nCurve = if (n > curveCap) curveInput.count() else n
-      val k = graft.ml.Embed.defaultK(nCurve) // reference k=⌈√n⌉
-      // maxN tied to curveCap, not the default: the Bernoulli sample lands
-      // near curveCap rows (2× covers its jitter), so SF growth can never
-      // flip this call from slow to hard-failure
-      val curve = graft.ml.Embed.collectCurve(
-        graft.ml.Embed.knnDistanceCurve(curveInput, "doc_id", "v", k,
-          maxN = (curveCap * 2).toInt))
+      // k = the reference's √n rule over the collected curve input's row
+      // count. maxN tied to curveCap, not the default: the Bernoulli
+      // sample lands near curveCap rows (2× covers its jitter), so SF
+      // growth can never flip this call from slow to hard-failure
+      val curve = graft.ml.Embed.knnDistanceCurveArray(curveInput,
+        "doc_id", "v", nCurve => graft.ml.Embed.defaultK(nCurve),
+        maxN = (curveCap * 2).toInt)
       graft.ml.Kneedle.epsilonSearch(curve)
         .getOrElse(curve(curve.length / 2))
     }

@@ -45,17 +45,29 @@ object Tables {
     * as the bulk of those queries' wall). A view is a lazy name→plan
     * binding, not data: every query still computes from parquet. Keyed
     * on the session OBJECT in a WeakHashMap (the flagshipStatsCache
-    * precedent) with the dir as the value, so a dir switch re-registers
-    * and dead sessions don't pin. `force` re-binds unconditionally —
-    * for callers that shadowed a view and need the fixture back. */
+    * precedent) with the dir and the bound views as the value, so a dir
+    * switch re-registers and dead sessions don't pin. The memo also
+    * re-binds when any view is no longer the relation it bound — a
+    * caller shadowed it with `createOrReplaceTempView` or dropped it — so
+    * a memo hit never hands back a stale view. */
   private val registeredFor = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  def registerAll(spark: SparkSession, sfDir: String,
-                  force: Boolean = false): Unit =
+    new java.util.WeakHashMap[SparkSession,
+      (String, Seq[java.lang.ref.WeakReference[AnyRef]])]())
+  def registerAll(spark: SparkSession, sfDir: String): Unit =
     registeredFor.synchronized {
-      if (force || registeredFor.get(spark) != sfDir) {
+      val catalog = spark.sessionState.catalog
+      // the catalog's stored relation per view (a re-bind replaces the
+      // object); held weakly, since its plan references the session key
+      def bound(): Seq[AnyRef] =
+        names.map(n => catalog.getRawTempView(n).orNull)
+      val memo = registeredFor.get(spark)
+      val fresh = memo != null && memo._1 == sfDir &&
+        memo._2.lazyZip(bound())
+          .forall((was, now) => now != null && (was.get eq now))
+      if (!fresh) {
         names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
-        registeredFor.put(spark, sfDir)
+        registeredFor.put(spark,
+          (sfDir, bound().map(new java.lang.ref.WeakReference(_))))
       }
     }
 

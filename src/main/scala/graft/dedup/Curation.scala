@@ -158,8 +158,9 @@ object Curation {
     * document gets the id of its duplicate CLUSTER (connected component,
     * labeled by the component's min doc id — so keep_id = group_id keeps
     * exactly one doc per group) and the group size. Docs in no pair are
-    * their own singleton group. Pair ids must come from `allIds` (every
-    * caller builds pairs as a self-join of the same id set).
+    * their own singleton group. A pair with an id outside `allIds` is
+    * ignored, so the output has exactly one row per `allIds` id and every
+    * group has its keeper.
     *
     * Pairs come from any candidate generator — exact Jaccard at test
     * scale, [[Dedup.nearDupPairs]] (banded LSH) at corpus scale.
@@ -186,8 +187,16 @@ object Curation {
     // generator never runs twice — the Dbscan.distributed pattern;
     // released in both branches (connectedComponents is EAGER: Pregel
     // materializes its own graph cache before returning)
+    // a pair naming an id outside `allIds` is dropped before either
+    // route sees it: components are taken over the graph INDUCED on
+    // allIds, so every group's min id — its keeper — is a real document
+    // and both routes emit exactly one row per allIds id
+    def present(c: String) =
+      allIds.select(col(idCol).cast("long").as(c))
     val edgePairs = pairs
       .select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .join(present("id_a"), Seq("id_a"), "left_semi")
+      .join(present("id_b"), Seq("id_b"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edgeSample =
       edgePairs.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()

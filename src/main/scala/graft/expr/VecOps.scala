@@ -217,6 +217,54 @@ object VecKernels {
     s
   }
 
+  /** The `k` rows of `ref` nearest to `v` by [[l2Dist]], as
+    * (distances, row indices) ascending by (dist, idx): distance ties go
+    * to the smaller idx, so callers encode their tie-break key in row
+    * order. One pass with a bounded max-heap whose root is the worst of
+    * the best k so far — O(m·d + m·log k), nothing materialized per pair.
+    * Returns min(k, m) entries. */
+  def nearestK(v: Array[Double], ref: Array[Array[Double]],
+               k: Int): (Array[Double], Array[Int]) = {
+    val kk = math.min(k, ref.length)
+    val hd = new Array[Double](kk)
+    val hi = new Array[Int](kk)
+    def worse(a: Int, b: Int): Boolean =
+      hd(a) > hd(b) || (hd(a) == hd(b) && hi(a) > hi(b))
+    def swap(a: Int, b: Int): Unit = {
+      val td = hd(a); hd(a) = hd(b); hd(b) = td
+      val ti = hi(a); hi(a) = hi(b); hi(b) = ti
+    }
+    def siftDown(size: Int): Unit = {
+      var c = 0
+      var done = false
+      while (!done) {
+        val l = 2 * c + 1; val r = l + 1
+        var w = c
+        if (l < size && worse(l, w)) w = l
+        if (r < size && worse(r, w)) w = r
+        if (w == c) done = true else { swap(c, w); c = w }
+      }
+    }
+    var size = 0
+    var r = 0
+    while (r < ref.length && kk > 0) {
+      val d = l2Dist(v, ref(r))
+      if (size < kk) {
+        hd(size) = d; hi(size) = r
+        var c = size
+        size += 1
+        while (c > 0 && worse(c, (c - 1) / 2)) { swap(c, (c - 1) / 2); c = (c - 1) / 2 }
+      } else if (d < hd(0) || (d == hd(0) && r < hi(0))) {
+        hd(0) = d; hi(0) = r
+        siftDown(kk)
+      }
+      r += 1
+    }
+    // pop the root (the worst) into the last free slot: ascending order
+    while (size > 1) { size -= 1; swap(0, size); siftDown(size) }
+    (hd, hi)
+  }
+
   def quantizeI8(v: Array[Double]): ArrayData = {
     var mx = 0.0
     var i = 0

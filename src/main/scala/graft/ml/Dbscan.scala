@@ -437,14 +437,6 @@ object Dbscan {
                   denseChunk: Int = 2048): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // phase timings to stderr when GRAFT_TIMING is set (perf triage aid)
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[dbscan] $phase: ${(now - tLast) / 1e9}%.3f s")
-      tLast = now
-    }
     val pts = df.select(col(idCol).cast("long").as("id"),
       col(featuresCol).as("features"))
     // PERSISTED: the edge relation feeds multiple consumers (the probe,
@@ -468,11 +460,10 @@ object Dbscan {
     // broadcast join. Past the cap the fully-distributed path (GraphX
     // Pregel CC) engages unchanged. Both routes produce
     // label = min core member id, indistinguishable downstream.
-    // this collect is where the LAZY chain above actually executes:
-    // the phase mark covers LSH fit + bucket join + probe together
+    // this collect is where the LAZY chain above actually executes
+    // (LSH fit + bucket join + probe together)
     val edgeSample =
       joined.as[(Long, Long)].limit(smallGraphEdgeCap + 1).collect()
-    mark("fit_join_probe")
     if (edgeSample.length <= smallGraphEdgeCap) {
       joined.unpersist(blocking = false)
       // degree = ε-neighbor count + 1 (self counts once, matching
@@ -507,12 +498,10 @@ object Dbscan {
           labels(a) = math.min(labels.getOrElse(a, Long.MaxValue), l)
         }
       }
-      mark("cc_driver")
       val labelDf = spark.createDataset(labels.toSeq).toDF("id", "label")
       // broadcast join onto the full id set; no checkpoint needed — the
       // lineage is one scan plus a local relation, nothing cached
-      // remains (and LAZY: the caller's action pays for it, so there is
-      // deliberately no timing mark here — it would measure nothing)
+      // remains (and LAZY: the caller's action pays for it)
       return pts.select("id")
         .join(broadcast(labelDf), Seq("id"), "left")
         .select(col("id").as(idCol),
@@ -532,10 +521,8 @@ object Dbscan {
       val edgeRdd =
         coreEdges.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
       val vertRdd = core.as[Long].rdd.map(id => (id, ()))
-      val r = Graph(vertRdd, edgeRdd).connectedComponents()
+      Graph(vertRdd, edgeRdd).connectedComponents()
         .vertices.toDF("id", "label") // label = min vertex id in component
-      mark("cc_graphx_built")
-      r
     }
     // border points: any non-core point with a core ε-neighbor joins that
     // cluster (lowest label for determinism); everything else is noise
@@ -553,7 +540,6 @@ object Dbscan {
     // checkpointed result itself (n rows of two longs — the data the
     // caller holds), reclaimed by the ContextCleaner when it drops.
     borderLabels.count()
-    mark("border_labels")
     joined.unpersist(blocking = false)
     val result = pts.select("id")
       .join(cc, Seq("id"), "left")
@@ -561,7 +547,6 @@ object Dbscan {
       .select(col("id").as(idCol),
         coalesce(col("label"), col("border_label"), lit(-1L)).as("label"))
       .localCheckpoint(true)
-    mark("result_checkpoint")
     borderLabels.unpersist(blocking = false)
     result
   }
@@ -579,8 +564,8 @@ object Dbscan {
     *     sampleCap tiny rows — and every input point attaches to the
     *     cluster of its nearest core within ε, else noise (−1).
     *
-    * Cost: O(sampleCap²) on the driver + one broadcast scan of
-    * O(n · #cores) native-kernel distances — no pairwise shuffle at ANY n,
+    * Cost: O(sampleCap²) on the driver + one map over the input of
+    * O(n · #cores) heap-select distances — no pairwise shuffle at ANY n,
     * which is the property that survives 100 TB. Labels are approximate vs
     * full DBSCAN: sampling can miss thin bridges between clusters and
     * clusters sparser than the sample rate (that is the documented
@@ -591,10 +576,9 @@ object Dbscan {
               seed: Long = 42L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.expr.GraftFunctions.ensureRegistered(spark)
-    // cache: the input lineage is read four times (count, sample
-    // collect, broadcast-attach scan, final id join) — without this an
-    // expensive upstream pipeline would recompute each time
+    // cache: the input lineage is read three times (count, sample
+    // collect, attach map) — without this an expensive upstream pipeline
+    // would recompute each time
     val base = df.select(col(idCol).cast("long").as(idCol), col(vecCol))
       .cache()
     val n = base.count()
@@ -602,7 +586,8 @@ object Dbscan {
     val samp =
       if (frac >= 1.0) base
       else base.sample(withReplacement = false, frac, seed)
-    val rows = samp.collect()
+    // a null vector has no neighbors: never a core, noise in the attach
+    val rows = samp.filter(col(vecCol).isNotNull).collect()
     val ids = rows.map(_.getLong(0))
     val pts = rows.map(_.getSeq[Any](1).map {
       case f: Float => f.toDouble
@@ -620,39 +605,38 @@ object Dbscan {
     // identical core VECTORS carry identical labels (distance 0 < eps and
     // both core => same cluster), and templated corpora collapse many
     // cores onto few distinct sentence vectors — dedupe so the attach
-    // scan pays one kernel eval per DISTINCT core. Sorted by label: the
-    // nn-topk expression breaks distance ties by matrix idx, so idx
-    // order == label order reproduces min(struct(dist, label)) exactly.
+    // scan pays one distance per DISTINCT core. Sorted by label: the
+    // heap-select breaks distance ties by row index, so row order ==
+    // label order sends an equidistant point to the smaller label.
     val distinctCores = cores.groupBy(_._2).iterator
-      .map { case (v, xs) => (xs.iterator.map(_._1).min, v) }
-      .toSeq.sortBy(_._1)
-    // nearest distinct core per row via the compiled graft_nn_topk kernel
-    // against the core matrix literal: scan-local, zero joined-row
-    // materialization (the BroadcastNestedLoopJoin form copied n·cores
-    // rows just to min them away), no shuffle of the input at all
-    val attached =
-      if (distinctCores.isEmpty) base.select(col(idCol)).limit(0)
-        .withColumn("attach_label", lit(null).cast("long"))
-      else {
-        val labelsLit = typedlit(distinctCores.map(_._1))
-        val matLit = typedlit(distinctCores.map(_._2.toSeq): Seq[Seq[Double]])
-        base
-          .select(col(idCol), element_at(
-            call_function("graft_nn_topk", col(vecCol), matLit, lit(1)), 1)
-            .as("nn"))
-          .filter(col("nn.dist") < eps)
-          .select(col(idCol),
-            element_at(labelsLit, col("nn.idx") + 1).as("attach_label"))
-      }
-    // materialize (lineage truncated, blocks auto-cleaned once the
-    // result is unreferenced), then release the input cache
-    val out = base.select(col(idCol))
-      .join(attached, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("attach_label"), lit(-1L)).as("label"))
-      .localCheckpoint(true)
-    base.unpersist()
-    out
+      .map { case (v, xs) => (xs.iterator.map(_._1).min, v.toArray) }
+      .toArray.sortBy(_._1)
+    // nearest distinct core per row: the (labels, matrix) pair is
+    // broadcast once and one map over the input emits (id, label) —
+    // strict dist < eps, else (or for a null vector) noise. No join, no
+    // shuffle, no reference set in the plan.
+    val bc = spark.sparkContext.broadcast(
+      (distinctCores.map(_._1), distinctCores.map(_._2)))
+    try {
+      // materialize (lineage truncated, blocks auto-cleaned once the
+      // result is unreferenced), then release the input cache
+      val out = base.select(col(idCol), col(vecCol).cast("array<double>"))
+        .as[(Long, Array[Double])]
+        .mapPartitions { it =>
+          val (labels, mat) = bc.value
+          it.map { case (id, v) =>
+            val label = if (v == null) -1L else {
+              val (d, i) = graft.expr.VecKernels.nearestK(v, mat, 1)
+              if (d.nonEmpty && d(0) < eps) labels(i(0)) else -1L
+            }
+            (id, label)
+          }
+        }
+        .toDF(idCol, "label")
+        .localCheckpoint(true)
+      base.unpersist()
+      out
+    } finally bc.destroy()
   }
 
   /** Helper: exact path over a DataFrame, for parity tests and reference-

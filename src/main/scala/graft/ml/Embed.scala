@@ -37,61 +37,91 @@ object Embed {
     * k = round(sqrt(n)) (word2vec_dbscan_approach.ipynb:28782). */
   def defaultK(n: Long): Int = math.max(2, math.round(math.sqrt(n.toDouble)).toInt)
 
-  /** M3 kNN average-distance curve, distributed, reproducing the
-    * reference's column-sort-then-row-mean quirk
+  /** M3 kNN average-distance curve, reproducing the reference's
+    * column-sort-then-row-mean quirk
     * (word2vec_dbscan_approach.ipynb:172-189): for each point take its
     * k nearest distances (rank j = 1..k); sort each rank's distances
     * ascending over all points (position i); curve[i] = mean over j of the
     * i-th smallest distance of rank j. k > 2 averages; k ≤ 2 uses the
     * 2nd-NN column alone, as the reference does.
     *
-    * Input: (id, vec: Array[Float|Double]). The reference set is collected
-    * to the driver (callers bound n by construction — a curve sample, a
-    * sub-300 fixture) and rides the plan as ONE matrix literal; each row
-    * then runs the compiled graft_nn_topk heap-select — O(n·d + n·log k)
-    * per row, NO n²-row join materialization, no shuffle until the tiny
-    * n·k rank stage. Callers at true scale pre-bucket (LSH) and use
-    * [[knnDistanceCurveApprox]]. The reference-set collect is structurally
-    * bounded: at most `maxN`+1 rows ever reach the driver (limit-pushed),
-    * and past `maxN` the call refuses — sample the input or switch to the
-    * approx path rather than growing the cap. The default cap is set at
-    * the MEASURED exact/approx crossover (r10, 64-dim embeddings, 32
-    * cores): exact 36.7 s vs approx 61.6 s at n=2×10⁴, approx 120 s vs
-    * exact ~1 h extrapolated (plus a 102 MB matrix literal) at n=2×10⁵ —
-    * the regimes cross near n≈4×10⁴, so below maxN=20000 this path is
-    * strictly faster and above it the approx path wins outright.
-    * Returns (i, curve), i = 0-based. */
+    * Input: (id, vec: Array[Float|Double]). The frame form of
+    * [[knnDistanceCurveArray]] (same reference set, same cap, no
+    * decimation): returns (i, curve), i = 0-based, as a local frame. */
   def knnDistanceCurve(df: DataFrame, idCol: String, vecCol: String,
                        k: Int, maxN: Int = 20000): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(df.sparkSession)
-    // self-pairs INCLUDED: sklearn's kneighbors over the training set
-    // returns self as column 0 (distance 0); the reference's k<=2 branch
-    // (distances[:,1]) is therefore the FIRST non-self neighbor, and the
-    // k>2 row-mean averages the zero self-column in. Excluding self here
-    // would shift every rank by one.
-    // matrix rows sorted by id: the expression breaks distance ties by
-    // idx, so idx order == id order reproduces the (dist, id_b) contract
-    val ref = df.select(col(idCol).cast("long").as("id"), col(vecCol))
+    val spark = df.sparkSession
+    import spark.implicits._
+    knnDistanceCurveArray(df, idCol, vecCol, _ => k, maxN,
+        maxPoints = Int.MaxValue)
+      .zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("i", "curve")
+  }
+
+  /** The kNN-distance curve of [[knnDistanceCurve]] as a driver array,
+    * decimated by [[collectCurve]]'s rule — the form the ε search reads.
+    *
+    * The reference set is collected to the driver ordered by id (callers
+    * bound n by construction — a curve sample, a sub-300 fixture) and
+    * broadcast ONCE as a primitive matrix; `k` comes from the collected
+    * row count (`k(n)`), so callers never count the input first. One map
+    * job then runs every point's heap-select ([[graft.expr.VecKernels
+    * .nearestK]], O(n·d + n·log k) per point) against the broadcast and
+    * collects the n·k distances (≤ 2.8 M doubles at the default cap); the
+    * per-rank sort and row mean are driver arithmetic. No n²-row join, no
+    * shuffle, no matrix in the plan. Self-pairs are INCLUDED: sklearn's
+    * kneighbors over the training set returns self as column 0 (distance
+    * 0), so the k ≤ 2 branch (distances[:,1]) is the FIRST non-self
+    * neighbor and the k > 2 row mean averages the zero self-column in.
+    * Distance ties resolve to the smaller id, the (dist, id) order of the
+    * reference's sort.
+    *
+    * The reference-set collect is structurally bounded: at most `maxN`+1
+    * rows ever reach the driver (limit-pushed), and past `maxN` the call
+    * refuses — sample the input or switch to [[knnDistanceCurveApprox]]
+    * rather than growing the cap. The default cap sits at the MEASURED
+    * exact/approx crossover (r10, 64-dim embeddings, 32 cores): exact
+    * 36.7 s vs approx 61.6 s at n=2×10⁴, approx 120 s vs exact ~1 h
+    * extrapolated at n=2×10⁵ — the regimes cross near n≈4×10⁴, so below
+    * maxN=20000 this path is strictly faster and above it the approx path
+    * wins outright. */
+  def knnDistanceCurveArray(df: DataFrame, idCol: String, vecCol: String,
+                            k: Int => Int, maxN: Int = 20000,
+                            maxPoints: Int = 10000): Array[Double] = {
+    val ref = df.select(col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>")) // float → double is exact
       .orderBy("id").limit(maxN + 1).collect()
     require(ref.length <= maxN,
-      s"knnDistanceCurve rides the reference set as a plan literal and is " +
+      s"knnDistanceCurve collects the reference set to the driver and is " +
         s"capped at maxN=$maxN rows (got more); sample the input or use " +
         "knnDistanceCurveApprox at scale")
-    val mat: Seq[Seq[Double]] = ref.toSeq.map(_.getSeq[Any](1).map {
-      case f: Float => f.toDouble
-      case d: Double => d
-    })
-    val topK = df.select(col(idCol).as("id_a"),
-        posexplode(call_function("graft_nn_topk", col(vecCol),
-          typedlit(mat), lit(k))))
-      .select(col("id_a"), (col("pos") + 1).as("j"),
-        col("col.dist").as("dist"))
-    val useCols = if (k > 2) topK else topK.filter(col("j") === 2)
-    val wRank = Window.partitionBy("j").orderBy(col("dist"), col("id_a"))
-    useCols
-      .withColumn("i", row_number().over(wRank) - 1)
-      .groupBy("i").agg(avg("dist").as("curve"))
-      .orderBy("i")
+    val n = ref.length
+    val kk = k(n)
+    require(kk >= 1, s"k must be >= 1, got $kk")
+    val mat = ref.map(_.getSeq[Double](1).toArray)
+    // rank columns averaged into the curve: all k, or the 2nd-NN alone
+    // (none when no point has a 2nd neighbor)
+    val width = math.min(kk, n)
+    val ranks = if (kk > 2) 0 until width else 1 until width
+    val sc = df.sparkSession.sparkContext
+    val bc = sc.broadcast(mat)
+    val dists: Array[Array[Double]] = try {
+      if (n == 0) Array.empty
+      else sc.parallelize(0 until n, math.min(n, sc.defaultParallelism))
+        .map(i => graft.expr.VecKernels.nearestK(bc.value(i), bc.value, kk)._1)
+        .collect()
+    } finally bc.destroy()
+    val cols = ranks.map { j =>
+      val c = dists.map(_(j)); java.util.Arrays.sort(c); c
+    }
+    val curve = Array.tabulate(if (cols.isEmpty) 0 else n) { i =>
+      var s = 0.0
+      cols.foreach(c => s += c(i))
+      s / cols.length
+    }
+    val step = decimationStep(n, maxPoints)
+    if (step == 1L) curve
+    else curve.indices.filter(i => i % step == 0 || i == n - 1)
+      .map(curve(_)).toArray
   }
 
   /** Scale path for M3: candidate pairs come from the banded
@@ -146,13 +176,16 @@ object Embed {
     val cached = curveDf.cache()
     try {
       val n = cached.count()
-      val step = math.max(1L, n / maxPoints)
+      val step = decimationStep(n, maxPoints)
       val kept =
         if (step == 1L) cached
         else cached.filter(col("i") % step === 0 || col("i") === (n - 1))
       kept.orderBy("i").select("curve").collect().map(_.getDouble(0))
     } finally cached.unpersist()
   }
+
+  private def decimationStep(n: Long, maxPoints: Int): Long =
+    math.max(1L, n / maxPoints)
 
   private def curveFromPairs(pairs: DataFrame, k: Int): DataFrame = {
     // native Euclidean kernel (graft.expr.GraftL2Dist): bit-identical to

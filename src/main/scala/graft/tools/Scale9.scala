@@ -496,9 +496,7 @@ object Scale9 {
     // sampled() scaladoc documents). That is also why ×100 is NOT run
     // here: ~100× the ×10 in-bucket join work regardless of ε — on data
     // this dense the honest ×100 path is Dbscan.sampled (no pairwise
-    // join at any n) or a retuned bucketLength, both documented. Run
-    // with GRAFT_TIMING=1 to see which CC route fired (cc_driver vs
-    // cc_graphx_built marks).
+    // join at any n) or a retuned bucketLength, both documented.
     if (sections("dbscan")) {
       for ((dir, xn, eps) <- Seq(("/root/testdata/sf0.1", 1, 1.2),
                                  ("benchdata/sf1", 10, 1.2))) {

@@ -108,6 +108,26 @@ class CurationSpec extends SparkSpec {
     assert(Seq(0L, 6L, 12L).forall(i => byId(i)._2 == i && byId(i)._4))
   }
 
+  test("dupGroups: pairs naming foreign ids give one row per allIds id on both routes") {
+    // 99 bridges 1 and 2 but is not a document; -5 would be the min of
+    // {-5, 4, 5}; 100-101 lies wholly outside the id set
+    val ids = (0L to 6L).toDF("doc_id")
+    val pairs = Seq((0L, 1L), (1L, 99L), (99L, 2L), (-5L, 4L), (4L, 5L),
+        (100L, 101L)).toDF("id_a", "id_b")
+    def run(cap: Int) =
+      Curation.dupGroups(ids, pairs, "doc_id", smallGraphEdgeCap = cap)
+        .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    val small = run(200000) // driver union-find
+    val large = run(0)      // GraphX
+    assert(small == large, s"routes diverged:\n$small\n$large")
+    assert(small.map(_._1) == (0L to 6L))
+    // components over the id set only: every group keeps exactly one doc
+    assert(small.map(r => r._1 -> r._2).toMap ==
+      Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
+    assert(small.groupBy(_._2).values.forall(g =>
+      g.count(_._4) == 1 && g.forall(_._3 == g.length)))
+  }
+
   test("tokenPack: exclusive-prefix shard assignment, docs never split") {
     // force several range partitions so the two-pass offsets are exercised
     val df = spark.range(0, 100).toDF("doc_id")

@@ -242,6 +242,60 @@ class DbscanSpec extends SparkSpec {
     assert(clusterOf.exists(s => s.forall(id => id >= 1000L && id < 2000L)))
   }
 
+  /** Brute-force nearest-core attach: the cores and their labels (min
+    * core id of the component) from exact DBSCAN on all points, then each
+    * point takes the label of the core nearest by (dist, label) when that
+    * distance is strictly under eps, else −1. */
+  private def bruteAttach(pts: Seq[(Long, Array[Double])], eps: Double,
+                          minPts: Int): Map[Long, Long] = {
+    val (labels, core) = Dbscan.exactWithCore(pts.map(_._2).toArray, eps, minPts)
+    val minCore = pts.indices.filter(core(_)).groupBy(labels(_))
+      .map { case (c, idxs) => c -> idxs.map(pts(_)._1).min }
+    val cores = pts.indices.filter(core(_)).map(i => (minCore(labels(i)), pts(i)._2))
+    def dist(a: Array[Double], b: Array[Double]) =
+      math.sqrt(a.indices.foldLeft(0.0)((s, i) => s + (a(i) - b(i)) * (a(i) - b(i))))
+    pts.map { case (id, v) =>
+      val near = cores.map { case (l, c) => (dist(v, c), l) }.filter(_._1 < eps)
+      id -> (if (near.isEmpty) -1L else near.min._2)
+    }.toMap
+  }
+
+  test("sampled attach equals the brute-force nearest core (ties, exactly-eps, null)") {
+    // cluster B (ids 5..8) sits right of cluster A (ids 20..23); 7001
+    // lies exactly equidistant (1.125) from A's core 0.75 and B's core
+    // 3.0 and is not core itself: the smaller label (5) wins. 7002 is at
+    // exactly eps from B's core 3.75: strict dist < eps keeps it noise.
+    val a = (0 until 4).map(i => (20L + i, Array(i * 0.25, 0.0)))
+    val b = (0 until 4).map(i => (5L + i, Array(3.0 + i * 0.25, 0.0)))
+    val pts = a ++ b ++ Seq((7001L, Array(1.875, 0.0)), (7002L, Array(5.0, 0.0)))
+    val want = bruteAttach(pts, eps = 1.25, minPts = 4)
+    assert(want(7001L) == 5L && want(7002L) == -1L)
+    assert(want(20L) == 20L && want(5L) == 5L)
+    val dbl = pts.map { case (id, v) => (id, v.toSeq) }.toDF("id", "vec")
+    val got = Dbscan.sampled(dbl, "id", "vec", eps = 1.25, minPts = 4,
+        sampleCap = 100)
+      .as[(Long, Long)].collect()
+    assert(got.length == pts.length)
+    assert(got.toMap == want)
+    // float vectors attach the same; a null vector is noise
+    val flt = (pts.map { case (id, v) => (id, v.map(_.toFloat).toSeq) } :+
+        ((9000L, null.asInstanceOf[Seq[Float]]))).toDF("id", "vec")
+    val gotF = Dbscan.sampled(flt, "id", "vec", eps = 1.25, minPts = 4,
+        sampleCap = 100)
+      .as[(Long, Long)].collect().toMap
+    assert(gotF == want + (9000L -> -1L))
+    // a random blob field: every point's label is its nearest core's
+    val rnd = new scala.util.Random(3)
+    val field = (0 until 200).map { i =>
+      val c = (i % 3) * 2.0
+      (i.toLong, Array(c + rnd.nextGaussian() * 0.4, rnd.nextGaussian() * 0.4))
+    }
+    val fieldDf = field.map { case (id, v) => (id, v.toSeq) }.toDF("id", "vec")
+    assert(Dbscan.sampled(fieldDf, "id", "vec", eps = 0.3, minPts = 5,
+        sampleCap = 1000).as[(Long, Long)].collect().toMap ==
+      bruteAttach(field, eps = 0.3, minPts = 5))
+  }
+
   test("sampled DBSCAN edge cases: empty input, single point") {
     val empty = Seq.empty[(Long, Seq[Double])].toDF("id", "vec")
     assert(Dbscan.sampled(empty, "id", "vec", eps = 1.0, minPts = 3)

@@ -1,9 +1,12 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("flagship: cluster the documents fixture end-to-end (M7+M9+A13)") {
@@ -99,6 +102,81 @@ class PipelineSpec extends SparkSpec {
     // at the boundary it still runs
     assert(Embed.knnDistanceCurve(emb, "vec_id", "embedding", k = 3,
       maxN = 30).count() == 30)
+  }
+
+  /** Brute-force reference of the kNN curve: every pair's distance
+    * (summed left to right like the kernel), each point's top k by
+    * (dist, id), each rank column sorted, row mean in rank order; k ≤ 2
+    * keeps the 2nd-NN column alone. */
+  private def bruteCurve(pts: Seq[(Long, Array[Double])], k: Int): Array[Double] = {
+    def dist(a: Array[Double], b: Array[Double]) =
+      math.sqrt(a.indices.foldLeft(0.0)((s, i) => s + (a(i) - b(i)) * (a(i) - b(i))))
+    val topK = pts.map { case (_, a) =>
+      pts.map { case (id, b) => (dist(a, b), id) }.sorted.take(k).map(_._1)
+    }
+    val ranks = if (k > 2) 0 until k else Seq(1)
+    val cols = ranks.filter(j => topK.forall(_.length > j))
+      .map(j => topK.map(_(j)).sorted)
+    if (cols.isEmpty) Array.empty
+    else Array.tabulate(pts.length)(i => cols.map(_(i)).sum / cols.length)
+  }
+
+  private def curvePoints(seed: Int): Seq[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(seed)
+    val base = (0 until 40).map(i =>
+      (i.toLong * 3 + 7, Array.fill(4)(rnd.nextInt(5) * 0.5 + rnd.nextGaussian() * 0.1)))
+    // exact copies and a shared lattice point: distance ties between ids
+    base ++ base.take(6).map { case (id, v) => (id + 1000, v.clone()) } ++
+      Seq((2000L, Array(0.5, 0.5, 0.5, 0.5)), (2001L, Array(0.5, 0.5, 0.5, 0.5)),
+        (2002L, Array(1.5, 0.5, 0.5, 0.5)), (2003L, Array(-0.5, 0.5, 0.5, 0.5)))
+  }
+
+  test("knnDistanceCurve equals the brute-force curve (ties, k<=2 and k>2, float/double)") {
+    val pts = curvePoints(11)
+    val dbl = pts.map { case (id, v) => (id, v.toSeq) }.toDF("id", "v")
+    val flt = pts.map { case (id, v) => (id, v.map(_.toFloat).toSeq) }.toDF("id", "v")
+    val fltPts = pts.map { case (id, v) => (id, v.map(_.toFloat.toDouble)) }
+    for (k <- Seq(1, 2, 3, 7, 60); (df, ref) <- Seq((dbl, pts), (flt, fltPts))) {
+      val got = Embed.knnDistanceCurve(df, "id", "v", k = k)
+        .as[(Int, Double)].collect()
+      val want = bruteCurve(ref, k)
+      assert(got.map(_._1).toSeq == want.indices, s"k=$k")
+      assert(got.map(_._2).toSeq == want.toSeq, s"k=$k")
+    }
+    // a lone point: no 2nd neighbor for k <= 2; the zero self column for k > 2
+    val one = Seq((1L, Seq(1.0, 2.0))).toDF("id", "v")
+    assert(Embed.knnDistanceCurve(one, "id", "v", k = 2).count() == 0)
+    assert(Embed.knnDistanceCurve(one, "id", "v", k = 3)
+      .as[(Int, Double)].collect().toSeq == Seq((0, 0.0)))
+    assert(Embed.knnDistanceCurve(one.limit(0), "id", "v", k = 3).count() == 0)
+  }
+
+  test("knnDistanceCurveArray: k from the collected count, collectCurve's decimation") {
+    val pts = curvePoints(5)
+    val df = pts.map { case (id, v) => (id, v.toSeq) }.toDF("id", "v")
+    val n = pts.length
+    val want = bruteCurve(pts, Embed.defaultK(n.toLong))
+    val whole = Embed.knnDistanceCurveArray(df, "id", "v",
+      m => Embed.defaultK(m.toLong))
+    assert(whole.toSeq == want.toSeq)
+    val maxPoints = 10
+    val step = n / maxPoints
+    assert(step > 1)
+    val dec = Embed.knnDistanceCurveArray(df, "id", "v",
+      m => Embed.defaultK(m.toLong), maxPoints = maxPoints)
+    val keep = want.indices.filter(i => i % step == 0 || i == n - 1)
+    assert(dec.toSeq == keep.map(want(_)))
+    // the same rule collectCurve applies to the frame form
+    val frame = Embed.knnDistanceCurve(df, "id", "v", k = Embed.defaultK(n.toLong))
+    assert(Embed.collectCurve(frame, maxPoints = maxPoints).toSeq == dec.toSeq)
+  }
+
+  test("m3_knn_curve: the AQE-final plan has no shuffle and no window") {
+    val df = graft.SparkEntry.queries("m3_knn_curve")(spark, sfDir)
+    assert(df.count() > 0)
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan)
   }
 
   test("knnDistanceCurveApprox tracks the exact curve's scale") {

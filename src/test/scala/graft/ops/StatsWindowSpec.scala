@@ -44,8 +44,7 @@ class StatsWindowSpec extends SparkSpec {
         (1 to 6).foreach(i =>
           assert(r.getDouble(i) == base.getDouble(i), s"col $i at p=$p"))
       }
-    } finally graft.core.Tables.registerAll(spark, sfDir, // restore the view
-      force = true)
+    } finally graft.core.Tables.registerAll(spark, sfDir) // restore the view
   }
 
   test("width_bucket edges: underflow 0, overflow n+1, boundary owns right") {
